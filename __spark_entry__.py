@@ -17,51 +17,17 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 # Importing the plan modules populates the registry.
 import infinidb_spark.plans.relational  # noqa: F401,E402
-
-try:  # optional modules appear as rounds progress
-    import infinidb_spark.plans.windows  # noqa: F401,E402
-except ImportError:
-    pass
-try:
-    import infinidb_spark.plans.functions  # noqa: F401,E402
-except ImportError:
-    pass
-try:
-    import infinidb_spark.plans.pipeline  # noqa: F401,E402
-except ImportError:
-    pass
-try:
-    import infinidb_spark.plans.events  # noqa: F401,E402
-except ImportError:
-    pass
-try:
-    import infinidb_spark.plans.sources  # noqa: F401,E402
-except ImportError:
-    pass
-try:
-    import infinidb_spark.plans.catalog  # noqa: F401,E402
-except ImportError:
-    pass
-try:
-    import infinidb_spark.plans.dml  # noqa: F401,E402
-except ImportError:
-    pass
-try:
-    import infinidb_spark.plans.temporal  # noqa: F401,E402
-except ImportError:
-    pass
-try:
-    import infinidb_spark.plans.dialect  # noqa: F401,E402
-except ImportError:
-    pass
-try:
-    import infinidb_spark.plans.ref_perf  # noqa: F401,E402
-except ImportError:
-    pass
-try:
-    import infinidb_spark.plans.tpch  # noqa: F401,E402
-except ImportError:
-    pass
+import infinidb_spark.plans.windows  # noqa: F401,E402
+import infinidb_spark.plans.functions  # noqa: F401,E402
+import infinidb_spark.plans.pipeline  # noqa: F401,E402
+import infinidb_spark.plans.events  # noqa: F401,E402
+import infinidb_spark.plans.sources  # noqa: F401,E402
+import infinidb_spark.plans.catalog  # noqa: F401,E402
+import infinidb_spark.plans.dml  # noqa: F401,E402
+import infinidb_spark.plans.temporal  # noqa: F401,E402
+import infinidb_spark.plans.dialect  # noqa: F401,E402
+import infinidb_spark.plans.ref_perf  # noqa: F401,E402
+import infinidb_spark.plans.tpch  # noqa: F401,E402
 
 from infinidb_spark.plans.registry import ORACLES, QUERIES  # noqa: E402
 

@@ -1086,31 +1086,88 @@ def _next_code(toks: list[Token], i: int) -> int | None:
     return i if i < len(toks) else None
 
 
-def _match_paren(toks: list[Token], open_i: int) -> int:
+# ------------------------------------------------------ token structure
+#
+# The ONE scanner every pass reads expression structure through: ( ),
+# [ ] and CASE … END are groups; _group_end matches one in either
+# direction, _depth0 walks what lies outside every group, and
+# _split_top_commas cuts a span at its depth-0 commas.
+
+#: each group delimiter → its partner (CASE/END match as words)
+_GROUP_PAIRS = {"(": ")", "[": "]", "CASE": "END",
+                ")": "(", "]": "[", "END": "CASE"}
+
+
+def _group_end(toks: list[Token], j: int, step: int = 1) -> int | None:
+    """Index of the delimiter matching the one at ``toks[j]``: scanning
+    right (``step=1``) from an opener to its closer, or left
+    (``step=-1``) from a closer to its opener.  Only the group's own
+    kind is counted — ( ), [ ] and CASE … END nest independently.
+    None when the group never closes."""
+    kind, here = toks[j][0], toks[j][1].upper()
+    there = _GROUP_PAIRS[here]
     depth = 0
-    for i in range(open_i, len(toks)):
-        if toks[i] == ("sym", "("):
-            depth += 1
-        elif toks[i] == ("sym", ")"):
-            depth -= 1
-            if depth == 0:
-                return i
-    raise DialectError("unbalanced parentheses")
+    while 0 <= j < len(toks):
+        k, t = toks[j]
+        if k == kind:
+            t = t.upper()
+            if t == here:
+                depth += 1
+            elif t == there:
+                depth -= 1
+                if depth == 0:
+                    return j
+        j += step
+    return None
+
+
+def _depth0(
+    toks: list[Token], lo: int = 0, hi: int | None = None, case: bool = False
+):
+    """Yield the indices in ``toks[lo:hi]`` that lie outside every ( )
+    and [ ] group — and outside CASE … END when ``case``.  A ')' with
+    no opener in the span closes the caller's scope: it is yielded and
+    ends the walk, as does an opener whose group does not close before
+    ``hi``."""
+    hi = len(toks) if hi is None else hi
+    i = lo
+    while i < hi:
+        k, t = toks[i]
+        if (k == "sym" and t in ("(", "[")) or (
+            case and k == "word" and t.upper() == "CASE"
+        ):
+            end = _group_end(toks, i)
+            if end is None or end >= hi:
+                return
+            i = end + 1
+            continue
+        yield i
+        if (k, t) == ("sym", ")"):
+            return
+        i += 1
+
+
+def _match_paren(toks: list[Token], open_i: int) -> int:
+    close = _group_end(toks, open_i)
+    if close is None:
+        raise DialectError("unbalanced parentheses")
+    return close
+
+
+def _split_top_commas(toks: list[Token], lo: int, hi: int) -> list[tuple[int, int]]:
+    """(start, end) spans of the depth-0 comma-separated items in
+    toks[lo:hi]."""
+    spans, s = [], lo
+    for j in _depth0(toks, lo, hi):
+        if toks[j] == ("sym", ","):
+            spans.append((s, j))
+            s = j + 1
+    spans.append((s, hi))
+    return spans
 
 
 def _split_args(toks: list[Token]) -> list[list[Token]]:
-    args: list[list[Token]] = [[]]
-    depth = 0
-    for tok in toks:
-        if tok == ("sym", "("):
-            depth += 1
-        elif tok == ("sym", ")"):
-            depth -= 1
-        if tok == ("sym", ",") and depth == 0:
-            args.append([])
-        else:
-            args[-1].append(tok)
-    return args
+    return [toks[a:b] for a, b in _split_top_commas(toks, 0, len(toks))]
 
 
 def _arg_text(toks: list[Token]) -> str:
@@ -1123,18 +1180,14 @@ def _group_concat(inner: list[Token]) -> list[Token]:
     if first is not None and inner[first][0] == "word" and inner[first][1].upper() == "DISTINCT":
         distinct = "DISTINCT "
         inner = inner[first + 1 :]
-    depth, order_i, sep_i = 0, None, None
-    for i, (k, t) in enumerate(inner):
-        if (k, t) == ("sym", "("):
-            depth += 1
-        elif (k, t) == ("sym", ")"):
-            depth -= 1
-        elif depth == 0 and k == "word":
-            u = t.upper()
-            if u == "ORDER" and order_i is None:
-                order_i = i
-            elif u == "SEPARATOR" and sep_i is None:
-                sep_i = i
+    order_i = sep_i = None
+    for i in _depth0(inner):
+        k, t = inner[i]
+        u = t.upper()
+        if k == "word" and u == "ORDER" and order_i is None:
+            order_i = i
+        elif k == "word" and u == "SEPARATOR" and sep_i is None:
+            sep_i = i
     expr_end = min(x for x in (order_i, sep_i, len(inner)) if x is not None)
     expr_args = _split_args(inner[:expr_end])
     # GROUP_CONCAT(a, '-', b) concatenates per row in MySQL
@@ -1177,18 +1230,12 @@ def _trim_func(inner: list[Token]) -> list[Token] | None:
     if len(rem) <= 1:
         return None
     # operand = everything after the depth-0 FROM in the raw stream
-    depth, from_i, seen_str = 0, None, False
-    for idx, t in enumerate(inner):
-        if t == ("sym", "("):
-            depth += 1
-        elif t == ("sym", ")"):
-            depth -= 1
-        elif depth == 0 and t[0] == "string":
+    from_i, seen_str = None, False
+    for idx in _depth0(inner):
+        t = inner[idx]
+        if t[0] == "string":
             seen_str = True
-        elif (
-            depth == 0 and seen_str and t[0] == "word"
-            and t[1].upper() == "FROM"
-        ):
+        elif seen_str and t[0] == "word" and t[1].upper() == "FROM":
             from_i = idx
             break
     if from_i is None:
@@ -1643,13 +1690,6 @@ def _fold_numeric_string_cmp(toks: list[Token]) -> list[Token]:
     (`3 * 2 = 'abc'`, `0 = 'abc' * 2`, `-1 < 'abc'`): the literal is
     then a subexpression operand, not the comparison's operand."""
 
-    def _arith_adjacent(j: int | None) -> bool:
-        return j is not None and (
-            (toks[j][0] == "sym" and toks[j][1] in
-             ("+", "-", "*", "/", "%", "^", "."))
-            or (toks[j][0] == "word" and toks[j][1].upper() in ("DIV", "MOD"))
-        )
-
     out: list[Token] = []
     i = 0
     while i < len(toks):
@@ -1666,12 +1706,14 @@ def _fold_numeric_string_cmp(toks: list[Token]) -> list[Token]:
                 elif toks[p][0] == "string" and toks[n][0] == "sym" \
                         and toks[n][1] in ("-", "+"):
                     n2 = _next_code(toks, n + 1)
-                    if n2 is not None and toks[n2][0] == "number" \
-                            and not _arith_adjacent(_next_code(toks, n2 + 1)):
+                    if n2 is not None and toks[n2][0] == "number":
                         lit = (toks[n][1] + toks[n2][1], toks[p][1], p, n2)
-            if lit is not None and (
-                _arith_adjacent(_prev_code(toks, lit[2]))
-                or _arith_adjacent(_next_code(toks, lit[3] + 1))
+            # beside an arithmetic operator, a ^ or a qualifying dot the
+            # literal is a subexpression's operand, not the comparison's
+            if lit is not None and any(
+                _is_arith_op(toks, j)
+                or (j is not None and toks[j] in (("sym", "^"), ("sym", ".")))
+                for j in (_prev_code(toks, lit[2]), _next_code(toks, lit[3] + 1))
             ):
                 lit = None
             if lit is not None:
@@ -1772,40 +1814,12 @@ def _interval_chain_before(toks: list[Token], unit_idx: int) -> bool:
     """True when the unit word at ``unit_idx`` closes an actual
     ``INTERVAL <quantity> <unit>`` chain.  The quantity is an arbitrary
     bounded expression (``INTERVAL 1+1 DAY``, ``INTERVAL t.n DAY``,
-    ``INTERVAL FLOOR(2.5) HOUR``), so the scan walks back over
-    expression tokens — atoms, arithmetic syms, dots, balanced paren
-    groups — until it reaches INTERVAL (chain confirmed), an
-    expression boundary (a comma/semicolon/unbalanced paren or a
-    clause/logical keyword — no chain), or a depth cap."""
-    j = _prev_code(toks, unit_idx)
-    for _ in range(24):
-        if j is None:
-            return False
-        k, t = toks[j]
-        if k == "word":
-            u = t.upper()
-            if u == "INTERVAL":
-                return True
-            if u in _BITOP_BOUNDARY_WORDS or u in ("AND", "OR", "NOT"):
-                return False
-            j = _prev_code(toks, j)
-            continue
-        if k == "sym":
-            if t == ")":
-                opener = _bitop_skip_group_left(toks, j)
-                if opener is None:
-                    return False
-                j = _prev_code(toks, opener)
-                continue
-            if t in ("+", "-", "*", "/", "%", "."):
-                j = _prev_code(toks, j)
-                continue
-            return False
-        if k in ("number", "string", "bident", "code"):
-            j = _prev_code(toks, j)
-            continue
-        return False
-    return False
+    ``INTERVAL FLOOR(2.5) HOUR``): its extent is the operand left of
+    the unit, and the chain is confirmed by INTERVAL right before it."""
+    start = _operand_extent(toks, unit_idx, _BITOP_PREC["<<"], -1)
+    p = _prev_code(toks, unit_idx if start is None else start)
+    return (p is not None and toks[p][0] == "word"
+            and toks[p][1].upper() == "INTERVAL")
 
 
 # ------------------------------------------- MySQL bitwise operators
@@ -1822,8 +1836,9 @@ def _interval_chain_before(toks: list[Token], unit_idx: int) -> bool:
 # UNSIGNED stand-in DECIMAL(20,0) (the CAST AS UNSIGNED type).
 #
 # Operand extents follow MYSQL precedence (^ > * / DIV % MOD > + - >
-# << >> > & > |), scanned token-wise with paren/bracket/CASE..END
-# group skips; processing is highest-level-first, leftmost-first, so
+# << >> > & > |): _operand_extent walks each side of the operator,
+# taking a ( )/[ ]/CASE..END group whole through the shared
+# _group_end; processing is highest-level-first, leftmost-first, so
 # mixed chains group exactly as mysqld parses them.  The &/|/^
 # fragments re-emit their operator INSIDE the binding lambda — on
 # re-entry (idempotency) the occurrence is recognized by its left
@@ -1876,282 +1891,102 @@ _HEX_TAIL_RE = _re.compile(r"^x[0-9a-fA-F]+$", _re.IGNORECASE)
 _BIN_TAIL_RE = _re.compile(r"^b[01]+$", _re.IGNORECASE)
 
 
-def _bitop_skip_group_left(toks: list[Token], j: int) -> int | None:
-    """toks[j] is ')' or ']'; return the matching opener's index."""
-    close, open_ = toks[j][1], {")": "(", "]": "["}[toks[j][1]]
-    depth = 1
-    j -= 1
-    while j >= 0:
-        if toks[j] == ("sym", close):
-            depth += 1
-        elif toks[j] == ("sym", open_):
-            depth -= 1
-            if depth == 0:
-                return j
-        j -= 1
-    return None
-
-
-def _bitop_skip_group_right(toks: list[Token], j: int) -> int | None:
-    """toks[j] is '(' or '['; return the matching closer's index."""
-    open_, close = toks[j][1], {"(": ")", "[": "]"}[toks[j][1]]
-    depth = 1
-    j += 1
-    while j < len(toks):
-        if toks[j] == ("sym", open_):
-            depth += 1
-        elif toks[j] == ("sym", close):
-            depth -= 1
-            if depth == 0:
-                return j
-        j += 1
-    return None
-
-
-def _bitop_case_left(toks: list[Token], end_idx: int) -> int | None:
-    """toks[end_idx] is the word END; index of its matching CASE."""
-    depth = 1
-    j = end_idx - 1
-    while j >= 0:
-        if toks[j][0] == "word":
-            u = toks[j][1].upper()
-            if u == "END":
-                depth += 1
-            elif u == "CASE":
-                depth -= 1
-                if depth == 0:
-                    return j
-        j -= 1
-    return None
-
-
-def _bitop_case_right(toks: list[Token], case_idx: int) -> int | None:
-    """toks[case_idx] is the word CASE; index of its matching END."""
-    depth = 1
-    j = case_idx + 1
-    while j < len(toks):
-        if toks[j][0] == "word":
-            u = toks[j][1].upper()
-            if u == "CASE":
-                depth += 1
-            elif u == "END":
-                depth -= 1
-                if depth == 0:
-                    return j
-        j += 1
-    return None
-
-
-def _bitop_left_extent(toks: list[Token], op_idx: int, prec: int) -> int | None:
-    """Start index of the left operand of the bit op at op_idx, by
-    MySQL precedence; None when no clean extent exists."""
-    start: int | None = None
-    expect_operand = True
-    just_group = False
-    j = _prev_code(toks, op_idx)
+def _operand_extent(
+    toks: list[Token], op_idx: int, prec: int, step: int
+) -> int | None:
+    """Far edge of the operand on one side of the operator at
+    ``op_idx`` — its first token scanning left (``step=-1``), its last
+    scanning right (``step=1``) — by MySQL precedence: the operand takes
+    in every binary operator binding tighter than ``prec``, prefix
+    signs and ~ / !, groups, qualified names and split literals
+    (0x0a, X'0a').  None when no clean extent exists."""
+    left = step < 0
+    edge: int | None = None
+    expect = True  # the next token scanned must supply an operand
+    grouped = False  # leftward: the piece just taken was a ( )/[ ] group
+    j = _prev_code(toks, op_idx) if left else _next_code(toks, op_idx + 1)
     while j is not None:
         k, t = toks[j]
-        if k == "sym" and t in (")", "]"):
-            # expect_operand: an operand group.  Otherwise only the
-            # '(...)' a just-consumed postfix '[index]' attaches to
-            # (f(x)[0] read leftward) continues the same operand.
-            if not expect_operand and not (just_group and t == ")"):
+        u = t.upper()
+        if k == "sym" and t in ((")", "]") if left else ("(", "[")):
+            # a group is an operand; after one, a group continues it
+            # only as call arguments or an index — leftward a (..)
+            # before a group, rightward any group after an operand
+            if left and not (expect or grouped and t == ")"):
                 break
-            opener = _bitop_skip_group_left(toks, j)
-            if opener is None:
+            if not left and expect and t == "[":
+                break
+            j = _group_end(toks, j, step)
+            if j is None:
                 return None
-            start, j = opener, _prev_code(toks, opener)
-            expect_operand, just_group = False, True
-            continue
-        if k == "sym":
-            p = _BITOP_PREC.get(t)
-            if t in ("~", "!"):
-                # prefix op: attaches to the operand just consumed (or
-                # opens the extent when it stands at the edge)
-                start, j = j, _prev_code(toks, j)
-                continue
-            if not expect_operand and t == ".":
-                # qualified reference: '.' joins member and qualifier
-                # into ONE operand (t.flags & 4 must not split at the
-                # dot and strand the 't.' prefix)
-                start, j = j, _prev_code(toks, j)
-                expect_operand, just_group = True, False
-                continue
-            if not expect_operand and t in ("-", "+"):
-                # unary vs binary sign: MySQL's unary minus binds
-                # ABOVE ^, so (-1) ^ 2 takes the sign INTO the operand;
-                # a sign preceded by an operand end is binary arith
-                p2 = _prev_code(toks, j)
-                operand_before = p2 is not None and (
-                    toks[p2][0] in ("number", "string", "bident", "code")
-                    or (toks[p2][0] == "sym" and toks[p2][1] in (")", "]"))
-                    or (toks[p2][0] == "word"
-                        and toks[p2][1].upper() not in _BITOP_BOUNDARY_WORDS
-                        and toks[p2][1].upper() not in ("DIV", "MOD"))
-                )
-                if not operand_before:
-                    start, j = j, _prev_code(toks, j)
-                    continue
-                if 70 > prec:
-                    start, j = j, _prev_code(toks, j)
-                    expect_operand, just_group = True, False
-                    continue
+            expect, grouped = False, True
+        elif k == "word" and u == ("END" if left else "CASE"):
+            if not expect:
                 break
-            if not expect_operand and p is not None and p > prec:
-                start, j = j, _prev_code(toks, j)
-                expect_operand, just_group = True, False
-                continue
-            if expect_operand and t in ("-", "+"):
-                # unary sign at the extent's edge (boundary follows)
-                start, j = j, _prev_code(toks, j)
-                continue
-            break
-        if k == "word":
-            u = t.upper()
-            if u == "END":
-                if not expect_operand:
-                    break
-                case_i = _bitop_case_left(toks, j)
-                if case_i is None:
-                    return None
-                start, j = case_i, _prev_code(toks, case_i)
-                expect_operand, just_group = False, False
-                continue
-            if u in ("DIV", "MOD"):
-                if expect_operand or 80 <= prec:
-                    break
-                start, j = j, _prev_code(toks, j)
-                expect_operand, just_group = True, False
-                continue
-            if u == "OVER":
-                # what was consumed so far is a window spec (paren
-                # group or named window), not an operand — no clean
-                # extent exists; leave this occurrence to Spark rather
-                # than corrupt it
+            j = _group_end(toks, j, step)
+            if j is None:
                 return None
-            if u in _BITOP_BOUNDARY_WORDS:
+            expect, grouped = False, False
+        elif k == "sym" and (
+            t in ("~", "!") and (left or expect)
+            or t in ("-", "+") and (expect or left and not _operand_before(toks, j))
+        ):
+            pass  # prefix operator: MySQL's unary ops bind above ^
+        elif (k == "sym" and (t in _BITOP_PREC or t == ".")) or (
+            k == "word" and u in ("DIV", "MOD")
+        ):
+            # binary operator, or the dot of a qualified name (binds
+            # tightest: t.flags & 4 must not strand the 't.' prefix)
+            if expect or (80 if k == "word" else _BITOP_PREC.get(t, 100)) <= prec:
                 break
-            if expect_operand:
-                start, j = j, _prev_code(toks, j)
-                expect_operand, just_group = False, False
-                continue
-            if just_group and u not in _BITOP_NEVER_FN:
-                # function name directly before its argument list
-                start, j = j, _prev_code(toks, j)
-                just_group = False
-                continue
+            expect, grouped = True, False
+        elif k == "word" and u == "OVER" and (left or not expect):
+            # a window function's OVER clause cannot be split from its
+            # call; leave this occurrence to Spark rather than corrupt it
+            return None
+        elif k == "word" and u in _BITOP_BOUNDARY_WORDS:
             break
-        if k in ("number", "string", "bident", "code"):
-            if expect_operand:
-                start, j = j, _prev_code(toks, j)
-                expect_operand, just_group = False, False
-                continue
-            # number '0' completing a 0xNN/0bNN pair, or an introducer
-            # word's string — handled by the pair checks below
-            if k == "number" and t == "0" and start is not None \
-                    and toks[start][0] == "word" \
-                    and (_HEX_TAIL_RE.match(toks[start][1])
-                         or _BIN_TAIL_RE.match(toks[start][1])) \
-                    and start == j + 1:
-                start, j = j, _prev_code(toks, j)
-                continue
+        elif expect and k in ("word", "number", "string", "bident", "code"):
+            expect, grouped = False, False
+        elif left and grouped and k == "word" and u not in _BITOP_NEVER_FN:
+            grouped = False  # function name directly before its arguments
+        elif edge is not None and _split_literal(
+            toks, *((j, edge) if left else (edge, j))
+        ):
+            if left and k == "word":
+                edge = j  # leftward an introduced literal ends the operand
+                break
+        else:
             break
-        break
-    if start is None:
-        return None
-    # absorb a charset/typed introducer directly before a string start
-    if toks[start][0] == "string":
-        p = _prev_code(toks, start)
-        if p is not None and toks[p][0] == "word" and (
-            toks[p][1].upper() in ("X", "B", "N", "_BINARY")
-            or toks[p][1].startswith("_")
-        ) and p == start - 1:
-            start = p
-    return start
+        if left or not expect:
+            edge = j
+        j = _prev_code(toks, j) if left else _next_code(toks, j + 1)
+    return edge
 
 
-def _bitop_right_extent(toks: list[Token], op_idx: int, prec: int) -> int | None:
-    """End index of the right operand of the bit op at op_idx."""
-    end: int | None = None
-    expect_operand = True
-    j = _next_code(toks, op_idx + 1)
-    while j is not None:
-        k, t = toks[j]
-        if k == "sym" and t in ("(", "["):
-            if expect_operand and t == "[":
-                break
-            closer = _bitop_skip_group_right(toks, j)
-            if closer is None:
-                return None
-            end, j = closer, _next_code(toks, closer + 1)
-            expect_operand = False
-            continue
-        if k == "sym":
-            p = _BITOP_PREC.get(t)
-            if expect_operand and t in ("-", "+", "~", "!"):
-                j = _next_code(toks, j + 1)
-                continue
-            if not expect_operand and t == ".":
-                # qualified reference (1 & t.flags): the dot joins the
-                # qualifier already consumed with the member ahead
-                j = _next_code(toks, j + 1)
-                expect_operand = True
-                continue
-            if not expect_operand and p is not None and p > prec:
-                j = _next_code(toks, j + 1)
-                expect_operand = True
-                continue
-            break
-        if k == "word":
-            u = t.upper()
-            if u == "CASE":
-                if not expect_operand:
-                    break
-                end_i = _bitop_case_right(toks, j)
-                if end_i is None:
-                    return None
-                end, j = end_i, _next_code(toks, end_i + 1)
-                expect_operand = False
-                continue
-            if u in ("DIV", "MOD"):
-                if expect_operand or 80 <= prec:
-                    break
-                j = _next_code(toks, j + 1)
-                expect_operand = True
-                continue
-            if u == "OVER" and not expect_operand:
-                # the operand just consumed is a window FUNCTION call —
-                # splitting it from its OVER clause would corrupt the
-                # statement; bail and leave this occurrence to Spark
-                return None
-            if u in _BITOP_BOUNDARY_WORDS:
-                break
-            if expect_operand:
-                end, j = j, _next_code(toks, j + 1)
-                expect_operand = False
-                continue
-            # xNN/bNN word completing an adjacent 0xNN/0bNN pair
-            if end is not None and toks[end] == ("number", "0") \
-                    and end == j - 1 and (_HEX_TAIL_RE.match(t)
-                                          or _BIN_TAIL_RE.match(t)):
-                end, j = j, _next_code(toks, j + 1)
-                continue
-            break
-        if k in ("number", "string", "bident", "code"):
-            if expect_operand:
-                end, j = j, _next_code(toks, j + 1)
-                expect_operand = False
-                continue
-            # string completing an adjacent introducer word (X'0a')
-            if k == "string" and end is not None \
-                    and toks[end][0] == "word" and end == j - 1 and (
-                        toks[end][1].upper() in ("X", "B", "N")
-                        or toks[end][1].startswith("_")):
-                end, j = j, _next_code(toks, j + 1)
-                continue
-            break
-        break
-    return end
+def _operand_before(toks: list[Token], j: int) -> bool:
+    """An operand ends just before toks[j], so a sign there is binary."""
+    p = _prev_code(toks, j)
+    return p is not None and (
+        toks[p][0] in ("number", "string", "bident", "code")
+        or (toks[p][0] == "sym" and toks[p][1] in (")", "]"))
+        or (toks[p][0] == "word"
+            and toks[p][1].upper() not in _BITOP_BOUNDARY_WORDS
+            and toks[p][1].upper() not in ("DIV", "MOD"))
+    )
+
+
+def _split_literal(toks: list[Token], a: int, b: int) -> bool:
+    """toks[a], toks[b] are one literal lexed as two adjacent tokens:
+    0x0a / 0b101 ('0' + word) or an introduced string (X'0a', _utf8'..')."""
+    if b != a + 1:
+        return False
+    (ka, ta), (kb, tb) = toks[a], toks[b]
+    if (ka, ta) == ("number", "0"):
+        return kb == "word" and bool(
+            _HEX_TAIL_RE.match(tb) or _BIN_TAIL_RE.match(tb))
+    return ka == "word" and kb == "string" and (
+        ta.upper() in ("X", "B", "N") or ta.startswith("_"))
 
 
 def _bitop_literal_int(text: str) -> str | None:
@@ -2280,7 +2115,7 @@ def _rewrite_bit_ops(toks: list[Token]) -> list[Token]:
                     # unary: operand is one prefixed primary (prec 95
                     # stops at every binary operator); re-entry shows
                     # as the fragment's own `~ bn_`
-                    re_ = _bitop_right_extent(toks, i, 95)
+                    re_ = _operand_extent(toks, i, 95, 1)
                     if re_ is None:
                         i += 1
                         continue
@@ -2297,8 +2132,8 @@ def _rewrite_bit_ops(toks: list[Token]) -> list[Token]:
                     )
                     changed = True
                     break
-                ls = _bitop_left_extent(toks, i, prec)
-                re_ = _bitop_right_extent(toks, i, prec)
+                ls = _operand_extent(toks, i, prec, -1)
+                re_ = _operand_extent(toks, i, prec, 1)
                 if ls is None or re_ is None:
                     i += 1
                     continue
@@ -2360,8 +2195,8 @@ def _soundex_frag_toks(oper: list[Token]) -> list[Token]:
 
 def _rewrite_sounds_like(toks: list[Token]) -> list[Token]:
     """`a SOUNDS LIKE b` → SOUNDEX(a) = SOUNDEX(b) (mysqld's
-    Item_func_sounds_like rewrite).  Operand extents reuse the bit-op
-    scanners at comparison precedence; operands splice as LIVE tokens
+    Item_func_sounds_like rewrite).  Operand extents come from
+    _operand_extent at comparison precedence; operands splice as LIVE tokens
     so inner MySQL constructs still translate.  The emission contains
     no SOUNDS token, so the pass is a no-op on re-entry."""
     while True:
@@ -2376,8 +2211,8 @@ def _rewrite_sounds_like(toks: list[Token]) -> list[Token]:
         if hit is None:
             return toks
         i, n = hit
-        ls = _bitop_left_extent(toks, i, 30)
-        re_ = _bitop_right_extent(toks, n, 30)
+        ls = _operand_extent(toks, i, 30, -1)
+        re_ = _operand_extent(toks, n, 30, 1)
         if ls is None or re_ is None:
             raise DialectError("SOUNDS LIKE could not parse its operands")
         frag = (
@@ -2394,20 +2229,12 @@ def _bool_span_end(toks: list[Token], start: int, terminators) -> int:
     """End of a boolean-context span: first depth-0 terminator keyword,
     depth-0 comma/semicolon, or the closing paren of an enclosing
     scope."""
-    depth = 0
-    for i in range(start, len(toks)):
+    for i in _depth0(toks, start):
         k, t = toks[i]
-        if (k, t) == ("sym", "("):
-            depth += 1
-        elif (k, t) == ("sym", ")"):
-            if depth == 0:
-                return i
-            depth -= 1
-        elif depth == 0:
-            if k == "word" and t.upper() in terminators:
-                return i
-            if k == "sym" and t in (",", ";"):
-                return i
+        if (k == "sym" and t in (")", ",", ";")) or (
+            k == "word" and t.upper() in terminators
+        ):
+            return i
     return len(toks)
 
 
@@ -2415,35 +2242,22 @@ def _split_bool_ops(span: list[Token]) -> list:
     """Split at depth-0 AND/OR/&& — skipping CASE..END bodies and the
     AND that closes a BETWEEN.  Returns [part, conn_token, part, ...]
     (odd positions are the connectives, normalized to AND/OR words)."""
-    parts: list = [[]]
-    depth = case_depth = between = 0
-    for tok in span:
-        k, t = tok
-        if (k, t) == ("sym", "("):
-            depth += 1
-        elif (k, t) == ("sym", ")"):
-            depth -= 1
-        elif depth == 0 and k == "word":
-            u = t.upper()
-            if u == "CASE":
-                case_depth += 1
-            elif u == "END" and case_depth:
-                case_depth -= 1
-            elif case_depth == 0:
-                if u == "BETWEEN":
-                    between += 1
-                elif u == "AND" and between:
-                    between -= 1
-                elif u in ("AND", "OR") and not between:
-                    parts.append(tok)  # keep original case
-                    parts.append([])
-                    continue
-        elif depth == 0 and case_depth == 0 and (k, t) == ("sym", "&&"):
-            parts.append(("word", "AND"))
-            parts.append([])
-            continue
-        parts[-1].append(tok)
-    return parts
+    parts: list = []
+    s = between = 0
+    for i in _depth0(span, case=True):
+        k, t = span[i]
+        u = t.upper()
+        if k == "word" and u == "BETWEEN":
+            between += 1
+        elif k == "word" and u == "AND" and between:
+            between -= 1
+        elif (k == "word" and u in ("AND", "OR") and not between) or (
+            (k, t) == ("sym", "&&")
+        ):
+            # keep a word's original case
+            parts += [span[s:i], span[i] if k == "word" else ("word", "AND")]
+            s = i + 1
+    return parts + [span[s:]]
 
 
 def _is_bool_expr(part: list[Token]) -> bool:
@@ -2451,26 +2265,13 @@ def _is_bool_expr(part: list[Token]) -> bool:
     predicate keyword (CASE..END bodies skipped), a TRUE/FALSE literal,
     a known boolean-returning call, or this pass's own try_cast wrap
     (re-entry idempotency)."""
-    depth = case_depth = 0
-    for tok in part:
-        k, t = tok
-        if (k, t) == ("sym", "("):
-            depth += 1
-        elif (k, t) == ("sym", ")"):
-            depth -= 1
-        elif depth == 0 and k == "word":
-            u = t.upper()
-            if u == "CASE":
-                case_depth += 1
-            elif u == "END" and case_depth:
-                case_depth -= 1
-            elif case_depth == 0 and (
-                u in _BOOL_WORDS or u in ("TRUE", "FALSE", "NOT")
-            ):
-                return True
-        elif depth == 0 and case_depth == 0 and k == "sym" and (
-            t in _BOOL_SYMS or t == "&&"
+    for i in _depth0(part, case=True):
+        k, t = part[i]
+        if k == "word" and (
+            t.upper() in _BOOL_WORDS or t.upper() in ("TRUE", "FALSE", "NOT")
         ):
+            return True
+        if k == "sym" and (t in _BOOL_SYMS or t == "&&"):
             return True
     codes = [j for j, tk in enumerate(part) if tk[0] not in ("ws", "comment")]
     if len(codes) >= 2 and part[codes[0]][0] == "word":
@@ -2593,22 +2394,8 @@ def _booleanize_if_logical(item: list[Token]) -> list[Token]:
 
 
 def _find_then(toks: list[Token], start: int) -> int | None:
-    depth = case_depth = 0
-    for j in range(start, len(toks)):
-        k, t = toks[j]
-        if (k, t) == ("sym", "("):
-            depth += 1
-        elif (k, t) == ("sym", ")"):
-            depth -= 1
-        elif depth == 0 and k == "word":
-            u = t.upper()
-            if u == "CASE":
-                case_depth += 1
-            elif u == "END" and case_depth:
-                case_depth -= 1
-            elif u == "THEN" and case_depth == 0:
-                return j
-    return None
+    return next((j for j in _depth0(toks, start, case=True)
+                 if toks[j][0] == "word" and toks[j][1].upper() == "THEN"), None)
 
 
 def _fold_boolean_contexts(toks: list[Token]) -> list[Token]:
@@ -2708,6 +2495,17 @@ def _fold_boolean_contexts(toks: list[Token]) -> list[Token]:
         out.append(toks[i])
         i += 1
     return out
+
+
+#: call names _rewrite translates from their rewritten argument list
+#: (besides _FMT_FUNCS and _TEMPLATES)
+_ARG_REWRITES = frozenset({
+    "GROUP_CONCAT", "DATE_ADD", "DATE_SUB", "ADDDATE", "SUBDATE", "EXTRACT",
+    "WEEK", "YEARWEEK", "INSERT", "CHAR", "GET_FORMAT", "TIME", "TRIM",
+    "LPAD", "RPAD", "TRUNCATE", "ATAN", "SQRT", "ASIN", "ACOS", "LOG",
+    "HOUR", "MINUTE", "SECOND", "UNIX_TIMESTAMP", "FIELD", "BIT_AND",
+    "BIT_OR", "BIT_XOR", "SUBSTRING", "SUBSTR", "MID",
+})
 
 
 def _rewrite(toks: list[Token]) -> list[Token]:
@@ -3169,7 +2967,15 @@ def _rewrite(toks: list[Token]) -> list[Token]:
             nxt = _next_code(toks, i + 1)
             if nxt is not None and toks[nxt] == ("sym", "("):
                 close = _match_paren(toks, nxt)
-                inner = _rewrite(toks[nxt + 1 : close])
+                # the translated argument list, built only for the calls
+                # rewritten below; any other call's arguments are
+                # rewritten once, in place, by this loop
+                inner = (
+                    _rewrite(toks[nxt + 1 : close])
+                    if upper in _ARG_REWRITES or upper in _FMT_FUNCS
+                    or upper in _TEMPLATES
+                    else None
+                )
                 if upper == "GROUP_CONCAT":
                     out.extend(_group_concat(inner))
                     i = close + 1
@@ -3672,32 +3478,7 @@ def _permissive_group_by(toks: list[Token]) -> list[Token]:
 
 def _scope_end(toks: list[Token], start: int) -> int:
     """Index just past this scope: the enclosing ')' or end of tokens."""
-    depth = 0
-    for j in range(start, len(toks)):
-        k, t = toks[j]
-        if (k, t) == ("sym", "("):
-            depth += 1
-        elif (k, t) == ("sym", ")"):
-            if depth == 0:
-                return j
-            depth -= 1
-    return len(toks)
-
-
-def _split_top_commas(toks: list[Token], lo: int, hi: int) -> list[tuple[int, int]]:
-    """(start, end) spans of comma-separated items in toks[lo:hi]."""
-    spans, depth, s = [], 0, lo
-    for j in range(lo, hi):
-        k, t = toks[j]
-        if (k, t) == ("sym", "("):
-            depth += 1
-        elif (k, t) == ("sym", ")"):
-            depth -= 1
-        elif depth == 0 and (k, t) == ("sym", ","):
-            spans.append((s, j))
-            s = j + 1
-    spans.append((s, hi))
-    return spans
+    return next((j for j in _depth0(toks, start) if toks[j] == ("sym", ")")), len(toks))
 
 
 def _bare_column(toks: list[Token], lo: int, hi: int):
@@ -3922,15 +3703,8 @@ def _expect_ident(toks: list[Token], i: int | None, what: str) -> tuple[str, int
 
 
 def _top_level_word(toks: list[Token], *words: str) -> int | None:
-    depth = 0
-    for i, (k, t) in enumerate(toks):
-        if (k, t) == ("sym", "("):
-            depth += 1
-        elif (k, t) == ("sym", ")"):
-            depth -= 1
-        elif depth == 0 and k == "word" and t.upper() in words:
-            return i
-    return None
+    return next((i for i in _depth0(toks)
+                 if toks[i][0] == "word" and toks[i][1].upper() in words), None)
 
 
 def parse_statement(sql: str) -> dict:
@@ -4781,13 +4555,8 @@ def _strip_on_duplicate(toks: list[Token]) -> list[Token]:
     tokens (whitespace/comments between, nothing else) — an INSERT ...
     SELECT whose join/where merely mentions columns named duplicate/key
     (``ON a.duplicate = b.key``) must not be truncated."""
-    depth = 0
-    for i, t in enumerate(toks):
-        if t == ("sym", "("):
-            depth += 1
-        elif t == ("sym", ")"):
-            depth -= 1
-        elif depth == 0 and t[0] == "word" and t[1].upper() == "ON":
+    for i in _depth0(toks):
+        if toks[i][0] == "word" and toks[i][1].upper() == "ON":
             j = i
             for w in ("DUPLICATE", "KEY", "UPDATE"):
                 j = _next_code(toks, j + 1)

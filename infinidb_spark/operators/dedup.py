@@ -839,17 +839,6 @@ def dedup_exact_incremental(
     )
 
 
-def simhash64(col: Column, token_pattern: str = r"\s+") -> Column:
-    """64-bit SimHash of a text column, pure SQL expressions.
-
-    Token hashes vote per bit (+1/-1); the fingerprint takes the sign.
-    Implemented as an aggregate over a 64-slot vote array with
-    ``zip_with`` — stays in codegen, no UDF.
-    """
-    votes = simhash_votes(col, token_pattern)
-    return simhash_from_votes(votes)
-
-
 def simhash_votes(col: Column, token_pattern: str = r"\s+") -> Column:
     """Per-bit vote array (64 longs) — materialize this with a
     ``withColumn`` before folding to the fingerprint so the aggregate

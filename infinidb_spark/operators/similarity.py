@@ -62,35 +62,6 @@ def cosine_topk(
     )
 
 
-def pairwise_topk(
-    df: DataFrame,
-    k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    bucket_col: str | None = "label",
-) -> DataFrame:
-    """Top-k nearest neighbors per vector within a bucket (co-partition
-    join — the IVF probe pattern).  ``bucket_col=None`` is the exact
-    quadratic variant; with a bucket it is the scale path."""
-    key = F.col(bucket_col) if bucket_col else F.lit(1)
-    base = df.select(
-        key.alias("_b"), F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("_v")
-    )
-    a = base.select(F.col("_b"), F.col("_id").alias("id_a"), F.col("_v").alias("v_a"))
-    b = base.select(F.col("_b").alias("_b2"), F.col("_id").alias("id_b"), F.col("_v").alias("v_b"))
-    from pyspark.sql import Window
-
-    sim = cosine_similarity(F.col("v_a"), F.col("v_b"))
-    w = Window.partitionBy("id_a").orderBy(F.col("cosine").desc(), F.col("id_b"))
-    return (
-        a.join(b, (a._b == b._b2) & (a.id_a != b.id_b))
-        .withColumn("cosine", F.round(sim, 6))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("id_a", "id_b", "cosine", "rn")
-    )
-
-
 def cosine_topk_batch(
     corpus: DataFrame,
     queries: DataFrame,

@@ -1253,33 +1253,23 @@ class InfiniSession:
         first variable's value, silently LOSING an autocommit toggle.
         Splits on depth-0 commas, parses every segment BEFORE applying
         any (a malformed item fails the whole statement, mysqld's
-        rule), then applies left to right.  Returns 0 when handled;
-        None (single segment / unrecognized form) falls through to the
-        existing single-assignment routes."""
+        rule), then applies left to right.  A single segment is handled
+        here only as ``@@[scope.]var = value``.  Returns 0 when handled;
+        None (any other single segment) falls through to the user
+        variable and ``parse_statement`` routes."""
         toks = list(toks)
         while toks and (
             toks[-1][0] in ("ws", "comment") or toks[-1] == ("sym", ";")
         ):
             toks.pop()
-        segs: list[list] = []
-        cur: list = []
-        depth = 0
-        for t in toks:
-            if t == ("sym", "("):
-                depth += 1
-            elif t == ("sym", ")"):
-                depth -= 1
-            if t == ("sym", ",") and depth == 0:
-                segs.append(cur)
-                cur = []
-            else:
-                cur.append(t)
-        segs.append(cur)
-        if len(segs) < 2:
+        segs = d._split_args(toks)
+        plans = [self._parse_set_segment(seg, d) for seg in segs]
+        if len(segs) == 1 and (
+            plans[0] is None or plans[0][0] != "sysvar"
+            or toks[d._next_code(toks, 0)] != ("sym", "@")
+        ):
             return None
-        plans = []
-        for seg in segs:
-            plan = self._parse_set_segment(seg, d)
+        for seg, plan in zip(segs, plans):
             if plan is None:
                 # a genuine assignment LIST with an unrecognized item
                 # must not fall through: the single-assignment path
@@ -1288,7 +1278,6 @@ class InfiniSession:
                     "unsupported item in SET assignment list: "
                     + d.render(list(seg)).strip()[:80]
                 )
-            plans.append(plan)
         for kind, name, value in plans:
             if kind == "sysvar":
                 self._apply_sysvar_assignment(name, value, d)
@@ -1315,40 +1304,22 @@ class InfiniSession:
         if dialect != "mysql":
             return self.spark.sql(statement)
         toks = d.tokenize(statement)
-        # SET @@[session.|global.]var = value — the assignment form
+        # SET @@[scope.]var = value[, ...] — the assignment form
         # clients use; intercept BEFORE substitution would inline the
         # lhs as a literal
-        codes = [t for t in toks if t[0] not in ("ws", "comment")]
+        set_i = d._next_code(toks, 0)
         if (
-            codes
-            and codes[0][0] == "word"
-            and codes[0][1].upper() == "SET"
+            set_i is not None
+            and toks[set_i][0] == "word"
+            and toks[set_i][1].upper() == "SET"
         ):
             # pass the ws-PRESERVING tail: _parse_set_segment renders
             # values from the raw stream (stripped tokens fused
             # adjacent words — '(SELECT max(x) FROM t)' became
             # '(SELECTmax(x)FROMt)')
-            set_i = next(
-                i for i, t in enumerate(toks) if t[0] not in ("ws", "comment")
-            )
             handled = self._set_multi(toks[set_i + 1 :], d)
             if handled is not None:
                 return handled
-        if (
-            len(codes) >= 5
-            and codes[0][1].upper() == "SET"
-            and codes[1] == ("sym", "@")
-            and codes[2] == ("sym", "@")
-        ):
-            rest = codes[3:]
-            if rest[0][0] == "word" and rest[0][1].lower() in ("session", "global") \
-                    and len(rest) >= 3 and rest[1] == ("sym", "."):
-                rest = rest[2:]
-            if len(rest) >= 3 and rest[0][0] == "word" and rest[1] == ("sym", "="):
-                name = rest[0][1].lower()
-                value = d.render(list(rest[2:])).strip().rstrip(";").strip()
-                self._apply_sysvar_assignment(name, value, d)
-                return 0
         toks = self._substitute_system_vars(toks, d)
         toks = self._substitute_session_funcs(toks, d)
         statement = d.render(toks)

@@ -35,6 +35,12 @@ def test_query_parity(name, spark, sf_dir, con):
         df.collect()
 
 
+def test_registry_holds_every_plan_module():
+    """The plan modules are plain imports: a broken one fails loudly
+    instead of silently dropping its family out of the gate."""
+    assert len(QUERIES) == 199
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert len(df.collect()) > 0

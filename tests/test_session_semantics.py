@@ -218,6 +218,27 @@ def test_sysvar_at_at_forms(spark, sf_dir):
     assert sess._autocommit is True
 
 
+def test_single_sysvar_assignment_shares_the_list_path(spark, sf_dir):
+    """A one-item ``SET @@[scope.]var = value`` goes through the same
+    segment parser as an assignment list: the value keeps its
+    whitespace (it used to render from whitespace-stripped tokens,
+    storing '(SELECT1)') and the ``local.`` scope is accepted like
+    ``session.``."""
+    from infinidb_spark.session import InfiniSession
+
+    sess = InfiniSession(spark, sf_dir)
+    sess.execute("SET @@session.x_expr = (SELECT 1) ;")
+    sess.execute("SET @@local.wait_timeout = 5")
+    sess.execute("SET @@sql_mode = 'ANSI'")
+    assert sess._sysvars["x_expr"] == "(SELECT 1)"
+    assert sess._sysvars["wait_timeout"] == "5"
+    assert sess._sysvars["sql_mode"] == "ANSI"
+    sess.execute("SET @@global.autocommit = OFF")
+    assert sess._autocommit is False
+    sess.execute("SET @@autocommit = 1")
+    assert sess._autocommit is True
+
+
 def test_show_table_status(spark, sf_dir):
     """SHOW TABLE STATUS: Name/Engine/Rows with row counts from footer
     metadata (the manifest) — never a data scan."""
